@@ -21,6 +21,11 @@ Differences from the reference, by design (SURVEY §1.3):
 - a failed read raises; no silent ``None``/empty fallbacks
   (accessor.py:327-335 quirks intentionally not replicated).
 
+A ``Project`` reads its coordinates (project ids and their samples, sorted)
+and builds its metadata frame once each, at first use: every loader, the
+ingest fan-out and the scalers share those two memos, so a request pays
+one coordinates job and one metadata build however many dtypes it loads.
+
 File layout consumed (mirrors the reference's cache tree, FIXTURES.md):
 ``{lake}/{dbase}/{dtype}/{project}/<files>`` with the reference's file
 naming (``{dbase}.{tag}.{project}.*`` for metadata tags, ``*.gtf*`` for
@@ -50,6 +55,10 @@ from pyrecount_spark.sources.readers import (
 )
 
 METADATA_JOIN_KEY = ["rail_id", "external_id", "study"]  # accessor.py:470
+
+
+def _nulls_last(value: str | None) -> tuple[bool, str]:
+    return value is None, value or ""
 
 
 class Metadata:
@@ -105,7 +114,9 @@ class Metadata:
 @dataclass
 class Project:
     """Per-project data access (accessor.py:37-91): dtype-dispatched loads
-    over the lake, Q7/Q8 scaling, memoized metadata (Q11)."""
+    over the lake, Q7/Q8 scaling, memoized coordinates and metadata (Q11).
+    ``metadata`` is read as given at first use; build a new ``Project`` to
+    see a different selection."""
 
     spark: SparkSession
     metadata: DataFrame
@@ -114,15 +125,32 @@ class Project:
     annotation: Annotation | None = None
     jxn_format: str = "all"
     _md_cache: DataFrame | None = field(default=None, repr=False)
+    _coords: dict[str, list[str]] | None = field(default=None, repr=False)
 
     # ---- derived coordinates (A3, accessor.py:56-57) ----
+    def _coordinates(self) -> dict[str, list[str]]:
+        """project -> its samples, both sorted; collected in one job at
+        first use and memoized, so every loader reads the same order."""
+        if self._coords is None:
+            pairs = self.metadata.select("project", "external_id").collect()
+            by_project: dict[str, set[str]] = {}
+            for pid, sid in pairs:
+                by_project.setdefault(pid, set()).add(sid)
+            self._coords = {
+                pid: sorted(by_project[pid], key=_nulls_last)
+                for pid in sorted(by_project, key=_nulls_last)
+            }
+        return self._coords
+
     @property
     def project_ids(self) -> list[str]:
-        return [r[0] for r in self.metadata.select("project").distinct().collect()]
+        return list(self._coordinates())
 
     @property
     def samples(self) -> list[str]:
-        return [r[0] for r in self.metadata.select("external_id").distinct().collect()]
+        return sorted(
+            {s for ss in self._coordinates().values() for s in ss}, key=_nulls_last
+        )
 
     # ---- reference-parity ingest (accessor.py:76-87) ----
     def cache(
@@ -143,14 +171,7 @@ class Project:
         if isinstance(dtypes, Dtype):
             dtypes = (dtypes,)
         rows = []
-        for pid in self.project_ids:
-            samples = [
-                r[0]
-                for r in self.metadata.filter(F.col("project") == pid)
-                .select("external_id")
-                .distinct()
-                .collect()
-            ]
+        for pid, samples in self._coordinates().items():
             loc = ProjectLocator(
                 root=root,
                 organism=organism,
@@ -182,7 +203,7 @@ class Project:
     # ---- loader registry (Q10, accessor.py:63-74) ----
     def load(self, dtype: Dtype):
         loader = {
-            Dtype.METADATA: self._load_metadata,
+            Dtype.METADATA: self.load_metadata,
             Dtype.GENE: self._load_counts,
             Dtype.EXON: self._load_exon,
             Dtype.JXN: self._load_junctions,
@@ -201,7 +222,7 @@ class Project:
         if self.dbase in ("gtex", "tcga"):  # accessor.py:288-289
             tags.remove(Tags.RECOUNT_PRED.value)
         per_project = []
-        for pid in self.project_ids:
+        for pid, samples in self._coordinates().items():
             pdir = self._project_dir(Dtype.METADATA, pid)
             frames = []
             for tag in tags:
@@ -211,13 +232,6 @@ class Project:
             if not frames:
                 raise FileNotFoundError(f"no metadata files in {pdir}")
             joined = multi_join(frames, on=METADATA_JOIN_KEY, how="inner")
-            samples = [
-                r[0]
-                for r in self.metadata.filter(F.col("project") == pid)
-                .select("external_id")
-                .distinct()
-                .collect()
-            ]
             per_project.append(joined.filter(F.col("external_id").isin(samples)))
         out = align_union(per_project)
         if "organism" in out.columns:
@@ -238,7 +252,7 @@ class Project:
         annotation = with_gtf_attributes(read_gtf(self.spark, anno_hits[0]))
 
         longs = []
-        for pid in self.project_ids:
+        for pid, samples in self._coordinates().items():
             hits = sorted(
                 _glob.glob(
                     os.path.join(
@@ -250,13 +264,6 @@ class Project:
                 raise FileNotFoundError(f"no {dtype.value} counts for {pid}")
             wide = read_tsv_counts(self.spark, hits)
             feature_col = wide.columns[0]
-            samples = [
-                r[0]
-                for r in self.metadata.filter(F.col("project") == pid)
-                .select("external_id")
-                .distinct()
-                .collect()
-            ]
             keep = [c for c in wide.columns[1:] if c in samples]
             missing = set(samples) - set(keep)
             if missing:  # P1 raise semantics (accessor.py:276-278)

@@ -126,40 +126,3 @@ def triangle_count(edges: DataFrame, a_col: str = "item_a", b_col: str = "item_b
     e3 = edges.select(F.col(a_col).alias("x"), F.col(b_col).alias("z"))
     tri = e1.join(e2, on="y").join(e3, on=["x", "z"])
     return tri.agg(F.count(F.lit(1)).alias("n_triangles"))
-
-
-def equi_width_histogram(
-    df: DataFrame, value: Column, buckets: int = 16
-) -> DataFrame:
-    """ANALYZE-style equi-width histogram over an integer-valued column.
-
-    min/max reduce in-plan (1-row aggregate, broadcast cross join — the
-    scalar-subquery pattern, no driver round trip), bucket assignment is
-    pure integer arithmetic (width = (max-min)//k + 1, so the max value
-    lands in bucket k-1), and the per-bucket rollup is one hash aggregate
-    keyed on ≤ k values. Everything integer → bit-identical in any
-    engine; no quantile interpolation to go float-flaky. Equi-DEPTH
-    boundaries would come from percentile() the same way, at the cost of
-    float boundary comparisons.
-
-    Returns (bucket, lo, hi, n_rows, n_distinct) for non-empty buckets.
-    """
-    c = df.select(value.cast("long").alias("v"))
-    mm = c.agg(F.min("v").alias("_mn"), F.max("v").alias("_mx"))
-    width = (F.col("_mx") - F.col("_mn")) / buckets
-    with_b = c.crossJoin(F.broadcast(mm)).withColumn(
-        "_w", F.floor(width).cast("long") + 1
-    )
-    return (
-        with_b.withColumn(
-            "bucket", F.expr("(v - _mn) div _w").cast("long")
-        )
-        .groupBy("bucket")
-        .agg(
-            F.min("v").alias("lo"),
-            F.max("v").alias("hi"),
-            F.count(F.lit(1)).alias("n_rows"),
-            F.count_distinct(F.col("v")).cast("long").alias("n_distinct"),
-        )
-        .orderBy("bucket")
-    )

@@ -31,7 +31,8 @@ def pagerank_fixed(
     = every endpoint. Returns (node, rank) after ``iterations`` steps.
 
     Symmetrization means no dangling nodes (every node has out-degree ≥ 1),
-    so no dangling-mass redistribution term is needed.
+    so no dangling-mass redistribution term is needed. An empty edge frame
+    has no nodes and yields an empty (node, rank) frame.
     """
     sym = edges.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst")).unionAll(
         edges.select(F.col(b_col).alias("src"), F.col(a_col).alias("dst"))
@@ -40,6 +41,8 @@ def pagerank_fixed(
     nodes = sym.select(F.col("src").alias("node")).distinct()
     deg = sym.groupBy(F.col("src").alias("node")).agg(F.count(F.lit(1)).alias("outdeg"))
     n = nodes.count()
+    if n == 0:
+        return nodes.select("node", F.lit(None).cast("double").alias("r"))
     teleport = (1.0 - damping) / n
     ranks = nodes.select("node", F.round(F.lit(1.0 / n), sync_decimals).alias("r"))
     for _ in range(iterations):

@@ -97,12 +97,6 @@ def distinct_rows(df: DataFrame, subset: Sequence[str] | None = None) -> DataFra
     return df.select(*subset).distinct() if subset else df.distinct()
 
 
-def distinct_values(df: DataFrame, col: str) -> list:
-    """A3 (accessor.py:56-57): distinct column to a driver list. Only for
-    genuinely small key domains (project ids) — never a fact column."""
-    return [r[0] for r in df.select(col).distinct().collect()]
-
-
 def top_k(df: DataFrame, order: Sequence[Column], k: int) -> DataFrame:
     """O1 (example.py:22) + limit: planned as TakeOrderedAndProject.
     Callers must pass a *total* order (include a unique tiebreaker) or the

@@ -35,12 +35,22 @@ def read_tsv_counts(
     spark: SparkSession, paths: str | Sequence[str], schema: StructType | None = None
 ) -> DataFrame:
     """S8 (accessor.py:261-265): counts TSV, ``#`` comment rows skipped.
-    Pass an explicit schema at scale — inference runs an extra full scan."""
+
+    Without ``schema`` the reader reads only the header line and types the
+    columns from it (FIXTURES F3): the first column (feature id) as string,
+    every sample column as bigint — no inference scan over the matrix. An
+    explicit ``schema`` is used as given. Either way the read is FAILFAST:
+    a count that does not parse as its type (``2.5`` in a bigint column)
+    raises when the frame is read, instead of becoming a silent null."""
     paths = [paths] if isinstance(paths, str) else list(paths)
-    reader = spark.read.options(sep="\t", header=True, comment="#")
-    if schema is not None:
-        return reader.schema(schema).csv(paths)
-    return reader.option("inferSchema", True).csv(paths)
+    reader = spark.read.options(sep="\t", header=True, comment="#", mode="FAILFAST")
+    if schema is None:
+        first, *samples = reader.csv(paths).columns
+        schema = StructType(
+            [StructField(first, StringType())]
+            + [StructField(c, LongType()) for c in samples]
+        )
+    return reader.schema(schema).csv(paths)
 
 
 GTF_SCHEMA = StructType(

@@ -70,20 +70,6 @@ def streaming_tumbling_counts(
     )
 
 
-def streaming_sliding_counts(
-    events: DataFrame,
-    window: str = "30 minutes",
-    slide: str = "15 minutes",
-    watermark: str = "1 hour",
-) -> DataFrame:
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window, slide).alias("w"))
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(F.col("w.start").alias("window_start"), "n_events")
-    )
-
-
 def streaming_sessionize(
     events: DataFrame,
     gap: str = "30 minutes",

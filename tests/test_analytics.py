@@ -124,6 +124,42 @@ def test_label_propagation_two_communities(spark):
     assert len(left) == 1 and len(right) == 1
 
 
+def test_pagerank_empty_edge_frame(spark):
+    """No edges means no nodes: an empty (node, rank) frame with the same
+    schema as a non-empty result, not a division by zero."""
+    from pyrecount_spark.operators.graph import pagerank_fixed
+
+    edges = spark.createDataFrame([(1, 2), (2, 3)], ["id_a", "id_b"])
+    ranks = pagerank_fixed(edges.limit(0))
+    assert ranks.collect() == []
+    assert ranks.schema == pagerank_fixed(edges).schema
+
+
+def test_pagerank_dup_graph_matches_oracle_without_near_duplicates(spark, tmp_path):
+    """A uniform-flavor corpus has no near-duplicate pairs, so the
+    verified edge graph is empty: the query returns the oracle's 0 rows."""
+    import sys
+    from pathlib import Path
+
+    import duckdb
+    import pyarrow.parquet as pq
+
+    sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "scripts"))
+    from gen_corpus import gen_documents_uniform
+
+    from pyrecount_spark import plans
+
+    plans.load_all()
+    pq.write_table(gen_documents_uniform(300, seed=7), tmp_path / "documents.parquet")
+    got = plans.QUERIES["pagerank_dup_graph"](spark, str(tmp_path))
+    con = duckdb.connect()
+    con.sql(f"CREATE VIEW documents AS SELECT * FROM '{tmp_path}/documents.parquet'")
+    want = con.sql(plans.ORACLES["pagerank_dup_graph"]).fetchall()
+    assert want == []
+    assert got.columns == ["doc_id", "rank"]
+    assert got.collect() == []
+
+
 def test_hits_directed_star(spark):
     """Star graph 1->{2,3,4}: node 1 is the pure hub, leaves split the
     authority mass; one round of mutual reinforcement reproduces the

@@ -8,6 +8,7 @@ Project(...).load(dtype) for every Dtype -> scale_auc — value-exact.
 from __future__ import annotations
 
 import gzip
+import os
 import textwrap
 
 import pytest
@@ -17,6 +18,7 @@ from pyrecount_spark.api import Metadata, Project
 from pyrecount_spark.operators.matrix import pivot_wide
 from pyrecount_spark.operators.relational import group_count, isin_filter, top_k
 from pyrecount_spark.sources.catalog import Annotation, Dtype
+from pyrecount_spark.sources.readers import read_tsv_counts
 
 
 def _tsv(*rows: str) -> str:
@@ -165,6 +167,28 @@ def test_project_metadata_join_and_union(project):
     assert set(rows) == {"s1", "s2", "s3"}
     assert rows["s1"].pred == "x" and rows["s1"].seq_stat == "ok"
     assert rows["s1"].project == "P1" and rows["s3"].project == "P2"
+    # coordinates come back sorted, so the per-project union has one order
+    assert project.project_ids == ["P1", "P2"]
+    assert project.samples == ["s1", "s2", "s3"]
+
+
+def test_project_coordinates_ignore_metadata_row_order(spark, lake, catalog_df, project):
+    """The memoized coordinates are sorted, not taken in the metadata
+    frame's row order: a Project over the same rows in reverse order sees
+    the same projects and samples, and its metadata union has the same
+    column order."""
+    flipped = Project(
+        spark,
+        metadata=catalog_df.filter(F.col("project").isin(["P1", "P2"]))
+        .orderBy(F.desc("external_id"))
+        .coalesce(1),
+        lake_dir=lake,
+        dbase="sra",
+        annotation=Annotation.GENCODE_V29,
+    )
+    assert flipped.project_ids == project.project_ids == ["P1", "P2"]
+    assert flipped.samples == project.samples
+    assert flipped.load(Dtype.METADATA).columns == project.load(Dtype.METADATA).columns
 
 
 def test_gene_load_long_and_wide_view(project):
@@ -340,9 +364,118 @@ def test_project_cache_gene_roundtrip(spark, lake, catalog_df, tmp_path):
     assert all(s == "fetched" for _, _, s in statuses)
     gtf_paths = [p for _, p, _ in statuses if ".gtf" in p]
     assert len(gtf_paths) == 1
+    # the manifest follows the sorted coordinates: P1, its GTF, then P2
+    assert [os.path.basename(p) for _, p, _ in statuses] == [
+        "sra.gene_sums.P1.G029.gz",
+        "human.gene_sums.G029.gtf.gz",
+        "sra.gene_sums.P2.G029.gz",
+    ]
     assert gtf_paths[0].endswith("gene_lake/sra/gene_sums/human.gene_sums.G029.gtf.gz")
 
     anno, counts = proj.load(Dtype.GENE)  # raised FileNotFoundError pre-fix
     assert anno.filter(F.col("gene_name") == "G_ONE").count() == 1
     got = {(r.feature_id, r.sample_id): r["count"] for r in counts.collect()}
     assert got[("g1", "s1")] == 10 and got[("g3", "s3")] == 9
+
+
+# ---------------------------------------------------------------------------
+# Count reader: columns typed from the header, FAILFAST (FIXTURES F3)
+# ---------------------------------------------------------------------------
+def test_count_reader_types_columns_from_header(spark, tmp_path):
+    """Without a schema: gene id string, every sample bigint, ``#`` lines
+    before the header skipped, counts above 2^31 read exactly."""
+    path = tmp_path / "counts.tsv"
+    big = 2**31 + 7
+    path.write_text(
+        _tsv("#first comment", "#second comment", "gene_id\ts1\ts2",
+             f"g1\t{big}\t0", "g2\t7\t8")
+    )
+    df = read_tsv_counts(spark, str(path))
+    assert [(f.name, f.dataType.simpleString()) for f in df.schema] == [
+        ("gene_id", "string"), ("s1", "bigint"), ("s2", "bigint"),
+    ]
+    assert {r.gene_id: (r.s1, r.s2) for r in df.collect()} == {
+        "g1": (big, 0), "g2": (7, 8),
+    }
+
+
+def test_count_reader_fails_loudly_on_non_integer_count(spark, tmp_path):
+    """A count that is not an integer raises; it never becomes a null."""
+    path = tmp_path / "counts.tsv"
+    path.write_text(_tsv("gene_id\ts1", "g1\t3", "g2\t2.5"))
+    with pytest.raises(Exception, match="FAILFAST"):
+        read_tsv_counts(spark, str(path)).collect()
+
+
+def test_count_reader_explicit_schema_wins(spark, tmp_path):
+    from pyspark.sql.types import DoubleType, StringType, StructField, StructType
+
+    path = tmp_path / "counts.tsv"
+    path.write_text(_tsv("#comment", "gene_id\ts1", "g1\t2.5"))
+    schema = StructType(
+        [StructField("feature", StringType()), StructField("s1", DoubleType())]
+    )
+    df = read_tsv_counts(spark, str(path), schema=schema)
+    assert df.schema == schema
+    assert [tuple(r) for r in df.collect()] == [("g1", 2.5)]
+
+
+# ---------------------------------------------------------------------------
+# Spark job budget of one request
+# ---------------------------------------------------------------------------
+# Jobs run by one single-project request (cache METADATA+GENE -> load
+# METADATA -> load GENE -> scale_auc -> collect) on the fixture lake:
+# 3 for cache (the coordinates collect over the uncached catalog, whose
+# distinct adds a shuffle stage, and the ingest fetch), 5 metadata header
+# reads (one per tag file, built once), 1 counts header read, 8 for the
+# collect (catalog distinct, metadata cache fill, broadcasts, result).
+REQUEST_JOB_BUDGET = 17
+
+
+def test_request_job_budget(spark, lake, catalog_df, tmp_path):
+    """Coordinates are collected once and metadata is built once per
+    Project, and the counts reader runs no inference scan: a whole request
+    stays within REQUEST_JOB_BUDGET Spark jobs."""
+    sources = {}
+    for dirpath, _, names in os.walk(lake):
+        for name in names:
+            sources[name.removesuffix(".tsv") + ".gz"] = os.path.join(dirpath, name)
+
+    def fetcher(url, dest):
+        import gzip as _gzip
+        import os as _os
+        import shutil as _shutil
+
+        with open(sources[_os.path.basename(url)], "rb") as src, _gzip.open(
+            dest, "wb"
+        ) as out:
+            _shutil.copyfileobj(src, out)
+
+    proj = Project(
+        spark,
+        metadata=catalog_df.filter(F.col("project") == "P1"),
+        lake_dir=str(tmp_path / "budget_lake"),
+        dbase="sra",
+        annotation=Annotation.GENCODE_V29,
+    )
+    sc = spark.sparkContext
+    group = "test-request-job-budget"
+    sc.setJobGroup(group, "one recount request")
+    try:
+        statuses = proj.cache(
+            "https://example.org/release", dtypes=(Dtype.METADATA, Dtype.GENE),
+            fetcher=fetcher,
+        )
+        md = proj.load(Dtype.METADATA)
+        _, counts = proj.load(Dtype.GENE)
+        rows = proj.scale_auc(counts, target_size=4e7).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert 0 < jobs <= REQUEST_JOB_BUDGET
+    assert [s for _, _, s in statuses] == ["fetched"] * 7
+    assert md is proj.load(Dtype.METADATA) is proj.load_metadata()
+    got = {(r.feature_id, r.sample_id): r["count"] for r in rows}
+    assert got == {("g1", "s1"): 20, ("g1", "s2"): 400,
+                   ("g2", "s1"): 40, ("g2", "s2"): 800}
